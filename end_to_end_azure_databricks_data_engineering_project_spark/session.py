@@ -41,21 +41,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
-        # Scale knobs (guide §2.3/§6), parameterized with local-neutral
-        # defaults so the driver's bench stays comparable: at 100 TB set
-        # SPARK_GRAFT_IO_CODEC=zstd (shuffle bytes shrink markedly for
-        # a bit more CPU — measure per workload) and
-        # SPARK_GRAFT_MAX_PARTITION_BYTES=512m-1g (fewer, larger scan
-        # tasks feeding any shuffle; local inputs are single small
-        # files, so the default 128m is already one task per file).
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

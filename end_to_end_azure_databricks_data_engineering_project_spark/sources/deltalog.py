@@ -41,9 +41,7 @@ Design, and why it differs from delta-spark's own writer:
   precisely the current snapshot's file set (``replay_live``).
   ``dataChange`` is false only for ``compact`` (OPTIMIZE), mirroring
   delta-spark — RESTORE and CLONE change the visible data and must
-  stay true for CDF-style consumers. (Legacy pre-manifest commits
-  re-added the full snapshot each time; ``replay_live`` handles both
-  encodings, since full re-add is just a degenerate delta.)
+  stay true for CDF-style consumers.
 
 - **Pre-existing tables** (created before log emission) start their
   log at commit 0 = the table as-of enablement (protocol + metaData +
@@ -258,9 +256,7 @@ def replay_live(table_dir: Path, delta_version: int) -> dict[str, dict]:
     newest checkpoint ≤ D when one exists — mandatory once log
     retention has expired the pre-checkpoint JSON commits, and an
     O(tail) speedup otherwise — then replays the remaining commits in
-    order. Returns {path: add-action dict}. Works for both the
-    incremental encoding and legacy full-re-add commits (a full re-add
-    is a degenerate delta)."""
+    order. Returns {path: add-action dict}."""
     live: dict[str, dict] = {}
     start = 0
     ck = latest_checkpoint_at_or_below(table_dir, delta_version)

@@ -4,11 +4,11 @@ on plain parquet).
 The reference stores silver/gold as Delta tables (reference
 ``silver_Dimensions.py:55`` ``format("delta")``) and relies on the Delta
 transaction log for atomic, exactly-once sink commits. Delta OSS jars
-are not on this classpath (gated behind an import-try below), so the
-engine provides ``ManagedTable``: a directory of immutable versioned
-snapshots plus a ``_latest`` pointer file that is swapped atomically
-(``os.replace``). Readers always see a complete snapshot; a crashed
-writer leaves an orphaned version directory, never a torn table.
+are not on this classpath, so the engine provides ``ManagedTable``: a
+directory of immutable versioned snapshots plus a ``_latest`` pointer
+file that is swapped atomically (``os.replace``). Readers always see a
+complete snapshot; a crashed writer leaves an orphaned version
+directory, never a torn table.
 
 Scale posture — STABLE FILE IDENTITIES: data files are immutable,
 globally-unique-named parquet in a shared per-table store
@@ -38,10 +38,12 @@ Writer safety: each version directory is claimed with an exclusive
 mkdir, so a losing concurrent writer fails loudly instead of
 corrupting the snapshot, and commits carry an optional (epoch_key,
 epoch) watermark making at-least-once foreachBatch replays
-idempotent. Tables written by pre-manifest engine revisions (data
-files inside version dirs, carried files hardlinked as ``prior_*``)
-stay readable everywhere; the first new write upgrades them by
-linking the prior snapshot into the store once.
+idempotent.
+
+On-disk format: this manifest layout is the only one read or written.
+Every committed version has ``_manifest.json``, ``_op`` and
+``_schema.json``, and the ``_latest`` pointer carries the ledger of
+committed versions (``committed`` / ``committed_floor``).
 """
 
 from __future__ import annotations
@@ -59,14 +61,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import deltalog
-
-try:  # Delta OSS if its jars are ever present; else versioned parquet.
-    from delta.tables import DeltaTable  # type: ignore
-
-    HAVE_DELTA = True
-except Exception:  # pragma: no cover - image has no delta jars
-    DeltaTable = None
-    HAVE_DELTA = False
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -121,8 +115,7 @@ def _relink_store_files(
     concurrent-append REBASE. The name rewrite is what keeps
     ``_gc_store``'s in-flight guard honest (it keys off the
     name-embedded claim version); the ``copy2`` fallback covers
-    filesystems without hardlink support, same as the legacy upgrade
-    path."""
+    filesystems without hardlink support."""
     import uuid as _uuid
 
     token = _uuid.uuid4().hex[:8]
@@ -170,8 +163,9 @@ class ManagedTable:
 
     Layout::
 
-        <root>/<name>/_latest          # {"version": N} — atomic pointer
-        <root>/<name>/v00000N/         # parquet snapshot for version N
+        <root>/<name>/_latest    # atomic pointer: {"version": N, "committed": [...]}
+        <root>/<name>/_data/     # immutable data files shared by all versions
+        <root>/<name>/v00000N/   # _manifest.json, _op, _schema.json of version N
     """
 
     # merge_keyed falls back to a full rewrite (no driver-side file
@@ -211,11 +205,12 @@ class ManagedTable:
         return self.dir / "_latest"
 
     def _pointer_state(self) -> dict:
+        state = {
+            "version": -1, "epochs": {}, "committed": [], "committed_floor": 0,
+        }
         p = self._pointer()
-        if not p.exists():
-            return {"version": -1, "epochs": {}}
-        state = json.loads(p.read_text())
-        state.setdefault("epochs", {})
+        if p.exists():
+            state.update(json.loads(p.read_text()))
         return state
 
     def current_version(self) -> int:
@@ -327,35 +322,6 @@ class ManagedTable:
         atomic with the commit that established it), or None."""
         return self._pointer_state().get("props", {}).get(key)
 
-    def migrate_prop(self, key: str, old, new) -> bool:
-        """One-time property REBIND under the commit lock: if ``key``
-        is currently bound to exactly ``old``, rebind it to ``new``
-        (pointer write, no version bump). For format upgrades of an
-        identity property — e.g. a stream binding whose encoding
-        changed between engine revisions — where the normal
-        first-binder-wins guard would otherwise refuse the table's own
-        still-valid state forever. Returns True iff the rebind
-        happened (False: key unbound or already ``new``); raises if
-        the key is bound to some THIRD value — that is a genuine
-        identity conflict the migration must not paper over."""
-        fd = self._acquire_commit_lock()
-        try:
-            state = self._pointer_state()
-            have = state.get("props", {}).get(key)
-            if have is None or have == new:
-                return False
-            if have != old:
-                raise ConcurrentWriteError(
-                    f"table {self.name}: property {key}={have!r} matches "
-                    f"neither the migration source {old!r} nor target "
-                    f"{new!r}; refusing to rebind a foreign identity"
-                )
-            state["props"][key] = new
-            self._write_pointer_locked(state)
-            return True
-        finally:
-            self._release_commit_lock(fd)
-
     def _commit(
         self,
         v: int,
@@ -383,12 +349,6 @@ class ManagedTable:
         recorded in the pointer state. Check and bind ride the SAME
         locked commit, so invariants like 'all committed sketch
         registers share one m' hold with no sidecar-file races."""
-        # resolve the committing version's Delta schemaString BEFORE
-        # taking the lock: the legacy fallback (no _schema.json) runs a
-        # Spark job, which must never sit inside the flock critical
-        # section — concurrent writers would spin out their lock
-        # deadline on a busy cluster
-        schema_string = self._schema_string_for(v)
         fd = self._acquire_commit_lock()
         ckpt_v: int | None = None
         try:
@@ -433,12 +393,7 @@ class ManagedTable:
             # dir whose writer lost the race (ConcurrentWriteError) or
             # crashed never appears here, so version-range readers can
             # tell real history from aborted-writer leftovers even BELOW
-            # the pointer. First commit on a PRE-ledger table seeds the
-            # ledger with its existing history (every marker-bearing dir
-            # at/below the old pointer — the legacy heuristic) so old
-            # committed snapshots stay readable.
-            if "committed" not in state:
-                self._seed_ledger(state)
+            # the pointer
             state["committed"].append(v)
             state["version"] = v
             # Delta-log record rides the SAME pointer write (delta
@@ -446,6 +401,7 @@ class ManagedTable:
             # gap). Pointer first — it is the source of truth — then
             # the log file; the crash window in between is healed by
             # the next commit (see _heal_delta_log).
+            schema_string = self._schema_string_for(v)
             emit_meta, adds, removes, n_live, cfg, upgrade = self._prepare_delta(
                 state, v, schema_string
             )
@@ -509,53 +465,17 @@ class ManagedTable:
                 )
         return True
 
-    def _seed_ledger(self, state: dict) -> None:
-        """Seed the committed-version ledger on a pre-ledger table from
-        its surviving marker-bearing dirs (the legacy heuristic), AND
-        record ``committed_floor = min(seeded)`` (pointer+1 when nothing
-        survives). The floor is what keeps vacuumed pre-ledger history
-        honest: if vacuum already removed old committed dirs, the seeded
-        list starts ABOVE the vacuum horizon — without a floor,
-        ``_committed_in_range`` would treat a cursor range crossing that
-        gap as fully derivable and silently drop the vacuumed versions'
-        rows from appended_since/changes_since instead of returning None
-        to force the rebuild fallback. Call only under the commit lock."""
-        seeded = sorted(
-            int(d.name[1:])
-            for d in self.dir.glob("v*")
-            if d.name[1:].isdigit()
-            and int(d.name[1:]) <= state["version"]
-            and (d / "_op").exists()
-        )
-        state["committed"] = seeded
-        state["committed_floor"] = max(
-            state.get("committed_floor", 0),
-            seeded[0] if seeded else state["version"] + 1,
-        )
-
     # -- Delta transaction-log emission (see sources/deltalog.py) -----------
-    def _schema_string_for(self, v: int) -> str | None:
+    def _schema_string_for(self, v: int) -> str:
         """Delta ``schemaString`` for version ``v``: the committed
         ``_schema.json`` (already Spark StructType JSON — the exact
-        format Delta's metaData uses); derived by a one-off parquet
-        read only for legacy pre-schema-tracking versions."""
-        p = self._version_dir(v) / "_schema.json"
-        if p.exists():
-            return p.read_text()
-        try:
-            return self.spark.read.parquet(str(self._version_dir(v))).schema.json()
-        except Exception:
-            return None
+        format Delta's metaData uses)."""
+        return (self._version_dir(v) / "_schema.json").read_text()
 
     def _delta_file_entries(self, mt_v: int) -> dict[str, Path]:
         """{log-relative path: filesystem path} for snapshot ``mt_v``:
-        stable ``_data/<name>`` paths for manifest versions,
-        version-local paths for legacy ones."""
-        res = self._resolve(mt_v)
-        if res is not None:
-            return {f"_data/{n}": self.store / n for n in res[0]}
-        vdir = self._version_dir(mt_v)
-        return {f"{vdir.name}/{f.name}": f for f in sorted(vdir.glob("*.parquet"))}
+        the stable ``_data/<name>`` store paths."""
+        return {f"_data/{n}": self.store / n for n in self._resolve(mt_v)[0]}
 
     def _dv_map_cached(self, mt_v: int) -> dict:
         """Resolved DV map for ``mt_v``, memoized per version (the map
@@ -581,13 +501,11 @@ class ManagedTable:
         entries = self._dv_map_cached(mt_v).get(key)
         return sorted({d for d, _ in entries}) if entries else []
 
-    def _prepare_delta(self, state: dict, v: int, schema_string: str | None):
+    def _prepare_delta(self, state: dict, v: int, schema_string: str):
         """Advance ``state['delta']`` for the commit of MT version ``v``
-        (call under the commit lock, before the pointer write;
-        ``schema_string`` is resolved by the caller OUTSIDE the lock —
-        the legacy fallback runs a Spark job). Returns what the
-        post-pointer log write needs: (emit metaData?, adds {path:
-        fs path}, remove paths, live file count) — a TRUE incremental
+        (call under the commit lock, before the pointer write). Returns
+        what the post-pointer log write needs: (emit metaData?, adds
+        {path: fs path}, remove paths, live file count) — a TRUE incremental
         delta, diffed against the superseded snapshot (the pointer
         version, which can never have been vacuumed at commit time)."""
         prior = state.get("delta")
@@ -619,11 +537,8 @@ class ManagedTable:
                 "writer_version": required_wv,
                 "dv_protocol": has_dv,
             }
-            return (
-                schema_string is not None, new_entries, [], len(new_entries),
-                cfg, None,
-            )
-        emit_meta = schema_string is not None and md5 != prior.get("schema_md5")
+            return True, new_entries, [], len(new_entries), cfg, None
+        emit_meta = md5 != prior.get("schema_md5")
         prior_paths = set(self._delta_file_entries(prior["mt_version"]))
         # a path whose DELETION-VECTOR state changed is re-added
         # (remove + add of the same path in one commit — the protocol's
@@ -667,7 +582,7 @@ class ManagedTable:
             "version": prior["version"] + 1,
             "mt_version": v,
             "table_id": prior["table_id"],
-            "schema_md5": md5 if md5 is not None else prior.get("schema_md5"),
+            "schema_md5": md5,
             "writer_version": new_wv,
             "dv_protocol": dv_protocol,
             # lowest retained commit file (raised by vacuum's log
@@ -677,17 +592,15 @@ class ManagedTable:
         return emit_meta, adds, removes, len(new_entries), cfg, upgrade
 
     @staticmethod
-    def _meta_fingerprint(schema_string: str | None, cfg: dict) -> str | None:
+    def _meta_fingerprint(schema_string: str, cfg: dict) -> str:
         """One fingerprint formula for every writer of ``schema_md5``
         (commit path AND log-restart heal): schema + configuration."""
-        if schema_string is None:
-            return None
         return deltalog.schema_fingerprint(
             schema_string + json.dumps(cfg, sort_keys=True)
         )
 
     def _write_delta_commit(
-        self, rec: dict, v: int, emit_meta: bool, schema_string: str | None,
+        self, rec: dict, v: int, emit_meta: bool, schema_string: str,
         adds: dict[str, Path], removes: list[str], n_live: int,
         cfg: dict | None = None, protocol_upgrade: int | dict | None = None,
     ) -> None:
@@ -696,7 +609,7 @@ class ManagedTable:
         # repeated JSON parses and no pointer re-read (``cfg`` comes
         # from the caller's in-memory state, the same source the
         # emit_meta fingerprint used)
-        m = self._manifest(v) or {}
+        m = self._committed_manifest(v)
         op = self._op(v)
         pcols = m.get("partition_columns", [])
         # deletion vectors (r12): the log mirrors Delta's DV shape —
@@ -771,7 +684,7 @@ class ManagedTable:
           replaced' → numAddedRows only;
         - incremental manifests (append/merge/DML) report both, plus
           ``numDeletedRows`` for DELETE commits."""
-        if not m or op in ("restore", "clone"):
+        if op in ("restore", "clone"):
             return {}
 
         def _rows(names, smap):
@@ -791,13 +704,11 @@ class ManagedTable:
         base = m.get("base")
         if op == "compact":
             removed = added  # content-identical by contract
-        elif m.get("upgrade") or base is None:
-            # upgrade: removed lists pre-store identities (unknowable);
+        elif base is None:
             # base-less: first write vs snapshot replacement ambiguous
             removed = None
         elif removed_names:
-            base_stats = self.file_stats(base)
-            removed = _rows(removed_names, base_stats or {})
+            removed = _rows(removed_names, self.file_stats(base))
         else:
             removed = 0
         dv_rows = sum(
@@ -917,8 +828,7 @@ class ManagedTable:
             self._write_pointer_locked(state)
             entries = self._delta_file_entries(v)
             self._write_delta_commit(
-                rec, v, schema_string is not None, schema_string,
-                entries, [], len(entries), cfg,
+                rec, v, True, schema_string, entries, [], len(entries), cfg,
             )
             return
         new_entries = self._delta_file_entries(v)
@@ -952,7 +862,7 @@ class ManagedTable:
         elif required_wv > deltalog.PROTOCOL["minWriterVersion"]:
             upgrade = required_wv
         self._write_delta_commit(
-            rec, v, schema_string is not None, schema_string,
+            rec, v, True, schema_string,
             adds, removes, len(new_entries), cfg, upgrade,
         )
 
@@ -1011,12 +921,9 @@ class ManagedTable:
             "table_id": rec.get("table_id"),
             "num_files": len(files),
             "size_bytes": sum(f.stat().st_size for f in files),
-            "num_rows": (
-                sum(e.get("rows", 0) for e in stats.values()) - dv_rows
-                if stats is not None else None
-            ),
+            "num_rows": sum(e.get("rows", 0) for e in stats.values()) - dv_rows,
             "num_deletion_vector_rows": dv_rows,
-            "schema": schema.json() if schema is not None else None,
+            "schema": schema.json(),
             "analyze_stats": (
                 json.loads(self.table_prop("analyze_stats"))
                 if self.table_prop("analyze_stats") else None
@@ -1043,10 +950,7 @@ class ManagedTable:
         d = self.detail()
         out: dict = {
             "computed_at_version": d["mt_version"],
-            "num_rows": (
-                d["num_rows"] if d["num_rows"] is not None
-                else self.read().count()
-            ),
+            "num_rows": d["num_rows"],
             "size_bytes": d["size_bytes"],
             "columns": {},
         }
@@ -1055,8 +959,7 @@ class ManagedTable:
                 ArrayType, BinaryType, MapType, StringType, StructType,
             )
 
-            schema = self.table_schema() or self.read().schema
-            fields = {f.name: f for f in schema.fields}
+            fields = {f.name: f for f in self.table_schema().fields}
             unknown = [c for c in columns if c not in fields]
             if unknown:
                 raise ValueError(
@@ -1143,15 +1046,14 @@ class ManagedTable:
 
     def table_schema(self, v: int | None = None):
         """The committed canonical schema for version ``v`` (default
-        current), or None for versions predating schema tracking."""
+        current), or None when no version is committed (``v < 0``)."""
         from pyspark.sql.types import StructType
 
         if v is None:
             v = self.current_version()
-        p = self._version_dir(v) / "_schema.json"
-        if not p.exists():
+        if v < 0:
             return None
-        return StructType.fromJson(json.loads(p.read_text()))
+        return StructType.fromJson(json.loads(self._schema_string_for(v)))
 
     def _align(self, df: DataFrame, evolve: bool):
         """Enforce the committed schema on an incoming batch (Delta-style).
@@ -1341,16 +1243,10 @@ class ManagedTable:
         return df, finalize
 
     # -- read/write ----------------------------------------------------------
-    def _read_version(self, v: int, names: list[str] | None) -> DataFrame:
-        """Read snapshot ``v`` pinned to its committed schema. ``names``
-        = resolved store members, or None for a legacy version (read
-        the version dir directly, exactly as before manifests)."""
+    def _read_version(self, v: int, names: list[str]) -> DataFrame:
+        """Read snapshot ``v`` (resolved store members ``names``) pinned
+        to its committed schema."""
         schema = self.table_schema(v)
-        if names is None:
-            reader = (
-                self.spark.read.schema(schema) if schema is not None else self.spark.read
-            )
-            return reader.parquet(str(self._version_dir(v)))
         # basePath (inside _read_members) reconstructs hive partition
         # columns from the store paths (Delta-style: partitioned data
         # files omit the partition columns); deletion vectors fold here
@@ -1363,15 +1259,11 @@ class ManagedTable:
         positional consumer (tuple compares, unionAll, exceptAll) and
         the 'pinned to its committed schema' contract. No-op select
         for unpartitioned layouts."""
-        if schema is None:
-            return df
         want = [f.name for f in schema.fields]
         return df if df.columns == want else df.select(*want)
 
     def read(self) -> DataFrame:
         v, names, _ = self._resolve_current()
-        if v < 0:
-            raise FileNotFoundError(f"table {self.name} has no committed version")
         return self._read_version(v, names)
 
     def read_or_empty(self, like: DataFrame) -> DataFrame:
@@ -1393,8 +1285,6 @@ class ManagedTable:
     #   stats:      footer stats for ADDED files only
     #   files:      full member list — present on rewrites and rebases
     #   stats_full: full stats map — present iff files is
-    #   upgrade:    True when this commit migrated a legacy snapshot into
-    #               the store (changes_since treats it as a barrier)
     def _manifest_path(self, v: int) -> Path:
         return self._version_dir(v) / "_manifest.json"
 
@@ -1404,33 +1294,43 @@ class ManagedTable:
             return None
         return json.loads(p.read_text())
 
+    def _committed_manifest(self, v: int) -> dict:
+        """The manifest of committed version ``v``; raises
+        ``FileNotFoundError`` naming ``v`` when it is missing."""
+        m = self._manifest(v)
+        if m is None:
+            raise FileNotFoundError(
+                f"table {self.name}: version {v} has no _manifest.json "
+                "(vacuumed mid-read? re-read the current version)"
+            )
+        return m
+
+    def _manifest_chain(self, v: int) -> list[dict]:
+        """Version ``v``'s manifest, then its bases back to the nearest
+        full manifest — bounded by ``manifest_rebase_depth``. Empty
+        before the first commit (``v < 0``)."""
+        chain: list[dict] = []
+        while v >= 0:
+            chain.append(self._committed_manifest(v))
+            if "files" in chain[-1]:
+                break
+            v = chain[-1]["base"]
+        return chain
+
     def _write_manifest_file(self, v: int, manifest: dict) -> None:
         tmp = self._version_dir(v) / f"._manifest.tmp.{os.getpid()}"
         tmp.write_text(json.dumps(manifest))
         os.replace(tmp, self._manifest_path(v))
 
-    def _resolve(self, v: int) -> tuple[list[str], dict] | None:
+    def _resolve(self, v: int) -> tuple[list[str], dict]:
         """Snapshot membership for version ``v``: (store file names in
-        commit order, full per-file stats map). None when ``v``
-        predates manifests (legacy layout: data files live inside the
-        version dir). Walks the base chain to the nearest full
-        manifest — bounded by ``manifest_rebase_depth``."""
-        m = self._manifest(v)
-        if m is None:
-            return None
-        chain = [m]
-        while "files" not in chain[-1]:
-            base = chain[-1]["base"]
-            bm = self._manifest(base) if base is not None else None
-            if bm is None:
-                raise FileNotFoundError(
-                    f"table {self.name}: version {v}'s manifest chain "
-                    f"needs version {base}, which is missing (vacuumed "
-                    "mid-read? re-read the current version) "
-                )
-            chain.append(bm)
-        files = dict.fromkeys(chain[-1]["files"])  # ordered set
-        stats = dict(chain[-1].get("stats_full") or {})
+        commit order, full per-file stats map); empty for ``v < 0``.
+        Raises ``FileNotFoundError`` when a manifest on the chain is
+        missing."""
+        chain = self._manifest_chain(v)
+        full = chain[-1] if chain else {}
+        files = dict.fromkeys(full.get("files", ()))  # ordered set
+        stats = dict(full.get("stats_full") or {})
         for m in reversed(chain[:-1]):
             for r in m.get("removed", ()):
                 files.pop(r, None)
@@ -1471,22 +1371,11 @@ class ManagedTable:
         manifest chain as ``_resolve``: depth-0 manifests carry the
         full map (``dv_full``; absent = none), children contribute
         their commit's ``dv_added`` and drop entries for removed
-        files. Empty for legacy versions."""
-        m = self._manifest(v)
-        if m is None:
-            return {}
-        chain = [m]
-        while "files" not in chain[-1]:
-            base = chain[-1]["base"]
-            bm = self._manifest(base) if base is not None else None
-            if bm is None:
-                raise FileNotFoundError(
-                    f"table {self.name}: version {v}'s manifest chain "
-                    f"needs version {base}, which is missing"
-                )
-            chain.append(bm)
+        files."""
+        chain = self._manifest_chain(v)
+        full = chain[-1] if chain else {}
         dv: dict[str, list] = {
-            k: list(v_) for k, v_ in (chain[-1].get("dv_full") or {}).items()
+            k: list(v_) for k, v_ in (full.get("dv_full") or {}).items()
         }
         for m in reversed(chain[:-1]):
             for r in m.get("removed", ()):
@@ -1575,9 +1464,7 @@ class ManagedTable:
         write path records NEW tombstones by position, and positions
         must refer to the RAW file so stacked DVs on one file compose."""
         names = list(names)
-        reader = (
-            self.spark.read.schema(schema) if schema is not None else self.spark.read
-        ).option("basePath", str(self.store))
+        reader = self.spark.read.schema(schema).option("basePath", str(self.store))
         tag = F.element_at(F.split(F.input_file_name(), "/"), -1)
         pos = F.col("_metadata.row_index")
 
@@ -1593,15 +1480,11 @@ class ManagedTable:
                 reader.parquet(*[str(self.store / n) for n in ns]), schema
             ))
 
+        if not names:
+            return self.spark.createDataFrame([], schema)
         dv_map = dv_map or {}
         dirty = [n for n in names if dv_map.get(n)]
-        if not dirty or schema is None:
-            if not names:
-                if schema is None:
-                    from pyspark.sql.types import StructType
-
-                    schema = StructType([])
-                return self.spark.createDataFrame([], schema)
+        if not dirty:
             return _plain(names)
         clean = [n for n in names if not dv_map.get(n)]
         out_cols = [f.name for f in schema.fields]
@@ -1625,29 +1508,25 @@ class ManagedTable:
             return folded
         return _plain(clean).unionByName(folded)
 
-    def _resolve_current(self) -> tuple[int, list[str], dict] | tuple[int, None, None]:
+    def _resolve_current(self) -> tuple[int, list[str], dict]:
         """(version, names, stats) for the current snapshot, retrying
         once if a concurrent vacuum rebased/pruned the chain mid-walk
         (the retry re-reads the pointer — the new head resolves)."""
         v = self.current_version()
+        if v < 0:
+            raise FileNotFoundError(f"table {self.name} has no committed version")
         try:
-            res = self._resolve(v)
+            names, stats = self._resolve(v)
         except FileNotFoundError:
             v = self.current_version()
-            res = self._resolve(v)
-        if res is None:
-            return v, None, None
-        return v, res[0], res[1]
+            names, stats = self._resolve(v)
+        return v, names, stats
 
     def data_files(self, v: int | None = None) -> list[Path]:
-        """Absolute paths of the snapshot's data files (store paths for
-        manifest versions; version-dir parquet for legacy ones)."""
+        """Absolute store paths of the snapshot's data files."""
         if v is None:
             v = self.current_version()
-        res = self._resolve(v)
-        if res is None:
-            return sorted(self._version_dir(v).glob("*.parquet"))
-        return [self.store / n for n in res[0]]
+        return [self.store / n for n in self._resolve(v)[0]]
 
     def _materialize(
         self, v: int, df: DataFrame, partition_by: Sequence[str] | None = None
@@ -1822,46 +1701,9 @@ class ManagedTable:
             stats[name] = {"rows": md.num_rows, "cols": entry_cols}
         return stats
 
-    def _link_legacy_into_store(self, v: int) -> tuple[list[str], dict]:
-        """One-time upgrade of a legacy snapshot: hardlink version
-        ``v``'s data files into the store under unique names (copy
-        fallback), remapping its stats entries to the new names.
-        O(files) ONCE per table — every later commit is O(changed)."""
-        import uuid as _uuid
-
-        vdir = self._version_dir(v)
-        self.store.mkdir(exist_ok=True)
-        token = _uuid.uuid4().hex[:8]
-        old_stats = self.file_stats(v) or {}
-        names: list[str] = []
-        stats: dict[str, dict] = {}
-        legacy = sorted(vdir.glob("*.parquet"))
-        for i, f in enumerate(legacy):
-            name = f"u{v:06d}-{i:05d}-{token}.parquet"
-            try:
-                os.link(f, self.store / name)
-            except OSError:
-                shutil.copy2(f, self.store / name)
-            names.append(name)
-            if f.name in old_stats:
-                stats[name] = old_stats[f.name]
-        if not stats and legacy:
-            # legacy version predating stats collection: read footers
-            # now so skipping keeps working after the upgrade
-            stats = self._collect_stats_for(names)
-        return names, stats
-
-    def _snapshot_members(self, v: int) -> tuple[list[str], dict, bool]:
-        """(names, stats, upgraded) for building a child manifest on top
-        of version ``v``: the resolved manifest members, or — legacy —
-        the snapshot linked into the store once (upgraded=True)."""
-        res = self._resolve(v)
-        if res is not None:
-            return res[0], res[1], False
-        names, stats = self._link_legacy_into_store(v)
-        return names, stats, True
-
     def _manifest_depth(self, v: int) -> int:
+        # a base vacuumed under an in-flight writer counts as depth 0:
+        # its child is re-parented onto the head by _rebase_commit
         m = self._manifest(v)
         return m.get("depth", 0) if m is not None else 0
 
@@ -1873,13 +1715,10 @@ class ManagedTable:
         stats: dict,
         base_names: list[str] | None = None,
         base_stats: dict | None = None,
-        upgrade: bool = False,
         dv_added: dict | None = None,
     ) -> dict:
         """An incremental manifest on ``base_v`` — rebased to a full one
-        when the chain would exceed ``manifest_rebase_depth`` or when
-        the base was just upgraded from legacy (its members exist only
-        in ``base_names``, not in any base manifest).
+        when the chain would exceed ``manifest_rebase_depth``.
 
         ``dv_added``: this commit's NEW deletion-vector entries
         ``{file: [[dv name, rows]]}`` (see ``_resolve_dv``); removed
@@ -1894,7 +1733,7 @@ class ManagedTable:
         }
         if dv_added:
             m["dv_added"] = dv_added
-        if upgrade or depth > self.manifest_rebase_depth:
+        if depth > self.manifest_rebase_depth:
             if base_names is None:
                 base_names, base_stats = self._resolve(base_v)
             files = dict.fromkeys(base_names)
@@ -1907,9 +1746,8 @@ class ManagedTable:
             full_stats.update(stats)
             m["files"] = list(files)
             m["stats_full"] = full_stats
-            # full manifests pin the RESOLVED dv map (upgraded legacy
-            # bases have none)
-            dv_full = {} if upgrade else self._resolve_dv(base_v)
+            # full manifests pin the RESOLVED dv map
+            dv_full = self._resolve_dv(base_v)
             for r in removed:
                 dv_full.pop(r, None)
             for f, entries in (dv_added or {}).items():
@@ -1917,47 +1755,30 @@ class ManagedTable:
             if dv_full:
                 m["dv_full"] = dv_full
             m["depth"] = 0
-            if upgrade:
-                m["upgrade"] = True
         return m
 
     # -- file statistics / data skipping ------------------------------------
-    def file_stats(self, v: int | None = None) -> dict | None:
+    def file_stats(self, v: int | None = None) -> dict:
         """The committed per-file stats map for version ``v`` (default
-        current), or None when the version predates stats collection.
-        Manifest versions resolve it through the manifest chain; legacy
-        versions read their ``_stats.json``."""
+        current), resolved through the manifest chain."""
         if v is None:
             v = self.current_version()
-        res = self._resolve(v)
-        if res is not None:
-            return res[1]
-        p = self._version_dir(v) / "_stats.json"
-        if not p.exists():
-            return None
-        return json.loads(p.read_text())
+        return self._resolve(v)[1]
 
     def pruned_files(self, predicates: dict) -> list[Path]:
         """Data skipping: the subset of current-snapshot files that can
         contain a row satisfying ``{col: (lo, hi)}`` range predicates
         (either bound may be None). Files without usable stats are kept
         — pruning is always a superset of the true answer."""
-        v, names, stats = self._resolve_current()
-        if names is None:  # legacy layout (stats keyed by basename)
-            pairs = [
-                (f.name, f)
-                for f in sorted(self._version_dir(v).glob("*.parquet"))
-            ]
-            stats = self.file_stats(v)
-        else:  # manifest layout (stats keyed by store-relative name)
-            pairs = [(n, self.store / n) for n in names]
+        _, names, stats = self._resolve_current()
+        pairs = [(n, self.store / n) for n in names]
         norm = {
             c: (_stat_value(lo), _stat_value(hi)) for c, (lo, hi) in predicates.items()
         }
         survivors = [
             (key, f)
             for key, f in pairs
-            if self._stats_overlap(stats.get(key) if stats else None, norm)
+            if self._stats_overlap(stats.get(key), norm)
         ]
         # EQUALITY predicates additionally probe the per-file key
         # blooms when bound (Delta's delta.bloomFilter read-side use):
@@ -1996,11 +1817,7 @@ class ManagedTable:
         bloom_cols = [c for c in json.loads(raw) if c in points]
         if not bloom_cols:
             return survivors
-        tschema = self.table_schema()
-        ttypes = (
-            {f.name: f.dataType for f in tschema.fields}
-            if tschema is not None else {}
-        )
+        ttypes = {f.name: f.dataType for f in self.table_schema().fields}
         import datetime as _dt
         import decimal as _decimal
 
@@ -2240,11 +2057,7 @@ class ManagedTable:
         # a silent duplicate-key merge (r11 review, reproduced). Safe
         # lossless widenings are cast up; anything else skips the
         # probe for that column (conservative, never wrong).
-        tschema = self.table_schema()
-        ttypes = (
-            {f.name: f.dataType for f in tschema.fields}
-            if tschema is not None else {}
-        )
+        ttypes = {f.name: f.dataType for f in self.table_schema().fields}
         btypes = {f.name: f.dataType for f in batch.schema.fields}
         _INT_W = {"tinyint": 0, "smallint": 1, "int": 2, "bigint": 3}
         _FRAC_W = {"float": 0, "double": 1}
@@ -2325,30 +2138,15 @@ class ManagedTable:
         cluster the table (``compact(cluster_by=...)``) to make the
         ranges disjoint and the skipping sharp."""
         files = self.pruned_files(predicates)
-        schema = self.table_schema()
-        if not files:
-            df = self.spark.createDataFrame([], schema or self.read().schema)
-        elif self.store in files[0].parents:
-            # store layout: pin the committed schema like read()/
-            # read_at (mixed pre/post-evolution files) and fold
-            # deletion vectors — a DV'd file's stats are a superset, so
-            # pruning stays correct, but its tombstoned rows must not
-            # surface
-            df = self._read_members(
-                [str(f.relative_to(self.store)) for f in files],
-                schema,
-                self._resolve_dv(self.current_version()),
-            )
-        else:
-            reader = (
-                self.spark.read.schema(schema)
-                if schema is not None
-                else self.spark.read
-            )
-            # legacy version-dir paths: no store prefix, no basePath
-            df = self._schema_order(
-                reader.parquet(*[str(f) for f in files]), schema
-            )
+        # pin the committed schema like read()/read_at (mixed pre/post-
+        # evolution files) and fold deletion vectors — a DV'd file's
+        # stats are a superset, so pruning stays correct, but its
+        # tombstoned rows must not surface
+        df = self._read_members(
+            [str(f.relative_to(self.store)) for f in files],
+            self.table_schema(),
+            self._resolve_dv(self.current_version()),
+        )
         for c, (lo, hi) in predicates.items():
             if lo is not None:
                 df = df.filter(F.col(c) >= F.lit(lo))
@@ -2366,21 +2164,14 @@ class ManagedTable:
         inside it (their dirs are gone too; silently skipping them
         would drop deltas instead of forcing the rebuild fallback).
 
-        With the pointer ledger this EXCLUDES losing-writer orphan dirs
-        sitting below the pointer (complete data + _op marker, but
-        never committed) — without the filter, appended_since/
-        changes_since would fold such phantom rows into incremental
-        deltas. Legacy tables (no ledger yet) fall back to the dense
-        range, which was correct for them because every pre-ledger
-        consumer also assumed density (vacuumed dirs fail the _op probe
-        and return None downstream)."""
+        The pointer ledger EXCLUDES losing-writer orphan dirs sitting
+        below the pointer (complete data + _op marker, but never
+        committed) — without the filter, appended_since/changes_since
+        would fold such phantom rows into incremental deltas."""
         state = self._pointer_state()
-        committed = state.get("committed")
-        if committed is not None:
-            if state.get("committed_floor", 0) > lo + 1:
-                return None  # pruned entries may fall inside (lo, hi]
-            return sorted(x for x in committed if lo < x <= hi)
-        return list(range(lo + 1, hi + 1))
+        if state["committed_floor"] > lo + 1:
+            return None  # pruned entries may fall inside (lo, hi]
+        return sorted(x for x in state["committed"] if lo < x <= hi)
 
     def appended_since(
         self, v: int | None, until: int | None = None
@@ -2410,18 +2201,9 @@ class ManagedTable:
         )
         if v is None:
             return None
-
-        def _empty() -> DataFrame:
-            # committed schema directly: building the full-snapshot
-            # frame just for .schema costs an O(table) driver file
-            # listing (legacy pre-schema tables still fall back)
-            s = self.table_schema(cur)
-            return self.spark.createDataFrame(
-                [], s if s is not None else self.read().schema
-            )
-
+        schema = self.table_schema(cur)
         if v >= cur:
-            return _empty()
+            return self.spark.createDataFrame([], schema)
         versions = self._committed_in_range(v, cur)
         if versions is None:
             return None
@@ -2440,26 +2222,8 @@ class ManagedTable:
                 continue
             if op != "append":
                 return None
-            m = self._manifest(vv)
-            if m is not None:
-                files.extend(str(self.store / n) for n in m["added"])
-            else:  # legacy layout: new rows = the non-carried files
-                files.extend(
-                    str(f)
-                    for f in self._version_dir(vv).glob("*.parquet")
-                    if not f.name.startswith("prior_")
-                )
-        if not files:
-            return _empty()
-        schema = self.table_schema(cur)
-        reader = self.spark.read.schema(schema) if schema is not None else self.spark.read
-        store_prefix = str(self.store) + os.sep
-        if all(f.startswith(store_prefix) for f in files):
-            # partitioned store files need the partition columns
-            # reconstructed from their hive paths (legacy files never
-            # do — legacy tables predate partitioning)
-            reader = reader.option("basePath", str(self.store))
-        return self._schema_order(reader.parquet(*sorted(files)), schema)
+            files.extend(self._committed_manifest(vv)["added"])
+        return self._read_members(sorted(files), schema)
 
     def changes_since(
         self,
@@ -2493,14 +2257,8 @@ class ManagedTable:
             return None
         schema = self.table_schema(cur)
 
-        def _read(paths):
-            if not paths:
-                return self.spark.createDataFrame([], schema or self.read().schema)
-            reader = self.spark.read.schema(schema) if schema is not None else self.spark.read
-            store_prefix = str(self.store) + os.sep
-            if all(p.startswith(store_prefix) for p in paths):
-                reader = reader.option("basePath", str(self.store))
-            return self._schema_order(reader.parquet(*sorted(paths)), schema)
+        def _read(names):
+            return self._read_members(sorted(names), schema)
 
         if v >= cur:
             return _read([]).withColumn("_change_type", F.lit("insert")).limit(0)
@@ -2515,111 +2273,66 @@ class ManagedTable:
                 # dataChange=false: content-identical rearrangement —
                 # zero row-level changes (same skip as appended_since)
                 continue
-            m = self._manifest(vv)
-            if m is not None:
-                new_files = [str(self.store / n) for n in m["added"]]
-                if op == "append":
-                    inserts.append(_read(new_files))
-                elif op in ("merge", "delete", "update"):
-                    # predicate DML commits carry the same incremental
-                    # manifest shape as merge (added/removed/cdc), so
-                    # the change feed spans them identically — a silver
-                    # DELETE/UPDATE reaches gold as row-level changes
-                    if m.get("upgrade"):
-                        # legacy→store upgrade commit: its removed list
-                        # names pre-store identities — not derivable
-                        return None
-                    if m.get("cdc"):
-                        # CDF fast path: the merge MATERIALIZED its
-                        # row-level changes (_change_data/, Delta cdc
-                        # actions) — read them instead of re-diffing
-                        # the touched files; raw delete/insert rows
-                        # feed the shared pairing below so the
-                        # caller's `keys` semantics stay identical
-                        from pyspark.sql.types import StringType, StructField, StructType
-
-                        base_schema = schema or self.read().schema
-                        cs = StructType(
-                            list(base_schema.fields)
-                            + [StructField("_change_type", StringType(), True)]
-                        )
-                        cdc_rows = self.spark.read.schema(cs).parquet(
-                            *[str(self.dir / "_change_data" / n) for n in m["cdc"]]
-                        )
-                        cols = [f.name for f in base_schema.fields]
-                        deletes.append(
-                            cdc_rows.filter(
-                                F.col("_change_type").isin("delete", "update_preimage")
-                            ).select(*cols)
-                        )
-                        inserts.append(
-                            cdc_rows.filter(
-                                F.col("_change_type").isin("insert", "update_postimage")
-                            ).select(*cols)
-                        )
-                        continue
-                    # removed store files stay on disk (vacuum's GC
-                    # keeps files referenced by retained manifests'
-                    # removed lists) — the touched-file diff reads them
-                    # directly, no prior-version reconstruction needed.
-                    # The OLD side folds the PRIOR version's deletion
-                    # vectors (rows a previous small delete already
-                    # tombstoned were not live before this commit, so
-                    # they must not re-surface as phantom deletes).
-                    prev_v = versions[i - 1] if i > 0 else v
-                    try:
-                        prev_dv = self._resolve_dv(prev_v)
-                    except FileNotFoundError:
-                        return None  # diff base vacuumed: rebuild instead
-                    old_rows = self._read_members(
-                        m["removed"], schema, prev_dv
-                    )
-                    new_rows = _read(new_files)
-                    deletes.append(old_rows.exceptAll(new_rows))
-                    inserts.append(new_rows.exceptAll(old_rows))
-                    # a DV commit's tombstoned rows ARE its deletes —
-                    # exact, no diff needed. Positional encoding (r13):
-                    # recover the deleted rows' content by semi-joining
-                    # the (file, position) pairs back onto the raw
-                    # tombstoned files (broadcast — tombstones are
-                    # small by the write gate)
-                    if m.get("dv_added"):
-                        base_schema = schema or self.read().schema
-                        deletes.append(
-                            self._dv_deleted_rows(m["dv_added"], base_schema)
-                        )
-                else:  # snapshot rewrite / compaction / unknown
-                    return None
-                continue
-            # legacy layout (pre-manifest commits)
-            vdir = self._version_dir(vv)
-            new_files = [str(f) for f in vdir.glob("*.parquet") if not f.name.startswith("prior_")]
             if op == "append":
-                inserts.append(_read(new_files))
-            elif op == "merge":
-                # touched files = prior-version data files NOT hardlinked
-                # in. "Prior" = the previous COMMITTED version (what the
-                # merge read as current) — with the ledger that is NOT
-                # necessarily vv-1, which could be an orphan dir.
-                linked = {
-                    f.name[len("prior_"):] for f in vdir.glob("prior_*.parquet")
-                }
-                prev_v = versions[i - 1] if i > 0 else v
-                prev_dir = self._version_dir(prev_v)
-                if not prev_dir.exists():
-                    # the diff base (often the caller's cursor version)
-                    # was vacuumed — an empty old side would turn every
-                    # rewritten row into a phantom 'insert' and drop the
-                    # deletes; not derivable, rebuild instead
-                    return None
-                touched_old = [
-                    str(f) for f in prev_dir.glob("*.parquet") if f.name not in linked
-                ]
-                old_rows, new_rows = _read(touched_old), _read(new_files)
-                deletes.append(old_rows.exceptAll(new_rows))
-                inserts.append(new_rows.exceptAll(old_rows))
-            else:  # snapshot rewrite / compaction / unknown → not derivable
-                return None
+                inserts.append(_read(self._committed_manifest(vv)["added"]))
+                continue
+            if op not in ("merge", "delete", "update"):
+                return None  # snapshot rewrite / restore / unknown
+            # predicate DML commits carry the same incremental manifest
+            # shape as merge (added/removed/cdc), so the change feed
+            # spans them identically — a silver DELETE/UPDATE reaches
+            # gold as row-level changes
+            m = self._committed_manifest(vv)
+            if m.get("cdc"):
+                # CDF fast path: the merge MATERIALIZED its row-level
+                # changes (_change_data/, Delta cdc actions) — read them
+                # instead of re-diffing the touched files; raw
+                # delete/insert rows feed the shared pairing below so
+                # the caller's `keys` semantics stay identical
+                from pyspark.sql.types import StringType, StructField, StructType
+
+                cs = StructType(
+                    list(schema.fields)
+                    + [StructField("_change_type", StringType(), True)]
+                )
+                cdc_rows = self.spark.read.schema(cs).parquet(
+                    *[str(self.dir / "_change_data" / n) for n in m["cdc"]]
+                )
+                cols = [f.name for f in schema.fields]
+                deletes.append(
+                    cdc_rows.filter(
+                        F.col("_change_type").isin("delete", "update_preimage")
+                    ).select(*cols)
+                )
+                inserts.append(
+                    cdc_rows.filter(
+                        F.col("_change_type").isin("insert", "update_postimage")
+                    ).select(*cols)
+                )
+                continue
+            # removed store files stay on disk (vacuum's GC keeps files
+            # referenced by retained manifests' removed lists) — the
+            # touched-file diff reads them directly, no prior-version
+            # reconstruction needed. The OLD side folds the PRIOR
+            # version's deletion vectors (rows a previous small delete
+            # already tombstoned were not live before this commit, so
+            # they must not re-surface as phantom deletes).
+            prev_v = versions[i - 1] if i > 0 else v
+            try:
+                prev_dv = self._resolve_dv(prev_v)
+            except FileNotFoundError:
+                return None  # diff base vacuumed: rebuild instead
+            old_rows = self._read_members(m["removed"], schema, prev_dv)
+            new_rows = _read(m["added"])
+            deletes.append(old_rows.exceptAll(new_rows))
+            inserts.append(new_rows.exceptAll(old_rows))
+            # a DV commit's tombstoned rows ARE its deletes — exact, no
+            # diff needed. Positional encoding (r13): recover the
+            # deleted rows' content by semi-joining the (file, position)
+            # pairs back onto the raw tombstoned files (broadcast —
+            # tombstones are small by the write gate)
+            if m.get("dv_added"):
+                deletes.append(self._dv_deleted_rows(m["dv_added"], schema))
         import functools
 
         empty = _read([])
@@ -2751,7 +2464,7 @@ class ManagedTable:
                 f"table {self.name}: empty range [start {lo}, end {hi}]"
             )
 
-        latest_schema = self.table_schema() or self.read().schema
+        latest_schema = self.table_schema()
         meta_cols = ["_change_type", "_commit_version", "_commit_timestamp"]
 
         def _tag(df: DataFrame, dv: int, ts: int) -> DataFrame:
@@ -2780,9 +2493,8 @@ class ManagedTable:
                 # Databricks' own pre/post-image change types intact
                 from pyspark.sql.types import StringType, StructField, StructType
 
-                base = self.table_schema(mv) or latest_schema
                 cs = StructType(
-                    list(base.fields)
+                    list(self.table_schema(mv).fields)
                     + [StructField("_change_type", StringType(), True)]
                 )
                 cdc_rows = self.spark.read.schema(cs).parquet(
@@ -2997,8 +2709,8 @@ class ManagedTable:
         partition_by: Sequence[str] | None = None,
         _apply_policies: bool = True,
     ) -> int | None:
-        """Append = new snapshot directory: new files land next to
-        hardlinked prior files (cheap, no data rewrite). Epoch watermark
+        """Append = new version whose manifest adds only the batch's
+        files; the snapshot's files carry by reference. Epoch watermark
         as in ``overwrite`` — replaying the same micro-batch is a no-op,
         making checkpoint + append genuinely exactly-once.
 
@@ -3016,11 +2728,10 @@ class ManagedTable:
         recheck). Same Observation caveat as ``overwrite``.
 
         Concurrency: the commit carries ``expected_version`` = the
-        version whose files this append hardlinked as priors, so a
-        writer that raced past another's commit raises
-        ``ConcurrentWriteError`` (re-read and retry) instead of
-        silently publishing a snapshot that omits the interleaved
-        commit's rows — appends must be additive, never lossy."""
+        version this append's manifest chains to; an interleaved commit
+        is resolved by rebasing (see ``_rebase_commit``) or raises
+        ``ConcurrentWriteError`` — appends must be additive, never
+        lossy."""
         if self._epoch_already_applied(epoch, epoch_key):
             return None
         v = self.current_version()
@@ -3061,18 +2772,9 @@ class ManagedTable:
         try:
             stats = self._collect_stats_for(names, pcols, schema)
             self._attach_blooms(names, stats, schema)
-            # O(new files) metadata: an incremental manifest chaining to v.
-            # No per-file syscalls over the carried snapshot — the one
-            # exception is the FIRST write over a legacy (pre-manifest)
-            # table, which links its snapshot into the store once.
-            if self._manifest(v) is not None:
-                manifest = self._build_child_manifest(v, names, [], stats)
-            else:
-                base_names, base_stats, _ = self._snapshot_members(v)
-                manifest = self._build_child_manifest(
-                    v, names, [], stats,
-                    base_names=base_names, base_stats=base_stats, upgrade=True,
-                )
+            # O(new files) metadata: an incremental manifest chaining to
+            # v — no per-file syscalls over the carried snapshot
+            manifest = self._build_child_manifest(v, names, [], stats)
             manifest["partition_columns"] = pcols
             self._write_manifest_file(new_v, manifest)
             self._write_op_marker(new_v, "append")
@@ -3202,7 +2904,7 @@ class ManagedTable:
         SET (the files it removed or tombstoned) is DISJOINT from every
         file the interleaved commits removed or tombstoned, the
         interleave contains no snapshot replacement (overwrite /
-        restore / clone / legacy upgrade), and the schema is unchanged.
+        restore / clone), and the schema is unchanged.
         A blind append's read set is empty, so it rebases over ANY
         disjoint content commit — merge and DML included; two merges or
         DMLs on disjoint files both land; maintenance (compact) rebases
@@ -3240,17 +2942,24 @@ class ManagedTable:
                 "rebase safe — retry the append"
             )
         old_m = self._manifest(claimed_v)
-        if old_m is not None and ("files" in old_m or old_m.get("upgrade")):
-            # full-rewrite / legacy-upgrade manifests replace the whole
-            # snapshot: their read set is everything — never rebaseable
+        if old_m is None:
+            # the staged claim dir vanished underneath us (an external
+            # vacuum_uncommitted run violating its no-active-writer
+            # contract, or manual cleanup) — the staged files are gone
+            # too; nothing to rebase
+            raise ConcurrentWriteError(
+                f"table {self.name}: staged claim v{claimed_v} vanished "
+                "mid-commit (external cleanup?) — retry"
+            )
+        if "files" in old_m:
+            # full-rewrite manifests replace the whole snapshot: their
+            # read set is everything — never rebaseable
             raise OptimisticConcurrencyError(
                 f"table {self.name}: staged commit v{claimed_v} is a "
                 "snapshot replacement; re-read and retry"
             )
-        read_set = (
-            set(old_m.get("removed", ())) | set(old_m.get("dv_added") or {})
-            if old_m is not None
-            else set()
+        read_set = set(old_m.get("removed", ())) | set(
+            old_m.get("dv_added") or {}
         )
         rebaseable_ops = ("append", "compact", "merge", "delete", "update")
         # Delta's WriteSerializable ConcurrentAppendException rule: a
@@ -3265,11 +2974,11 @@ class ManagedTable:
         # (``read_bounds``); a winner add overlapping it — or a loser
         # with no provable envelope — keeps the loud conflict.
         read_dependent = op in ("merge", "delete", "update")
-        loser_bounds = (old_m.get("read_bounds") or {}) if old_m else {}
+        loser_bounds = old_m.get("read_bounds") or {}
         for vv in interleaved:
             iop = self._op(vv)
-            im = self._manifest(vv)
-            if iop not in rebaseable_ops or im is None or im.get("upgrade"):
+            im = self._manifest(vv)  # None: vacuumed under this rebase
+            if iop not in rebaseable_ops or im is None:
                 raise OptimisticConcurrencyError(
                     f"table {self.name}: interleaved commit v{vv} ({iop}) "
                     "replaced the snapshot — a content change this commit "
@@ -3308,32 +3017,18 @@ class ManagedTable:
         # always nullable, so a content-identical compact widens the
         # committed nullability — benign for a blind append (its files
         # were written under the stricter schema)
-        if head_schema is None or [
-            (f.name, f.dataType) for f in head_schema.fields
-        ] != [(f.name, f.dataType) for f in schema.fields]:
+        if [(f.name, f.dataType) for f in head_schema.fields] != [
+            (f.name, f.dataType) for f in schema.fields
+        ]:
             raise OptimisticConcurrencyError(
                 f"table {self.name}: schema changed by an interleaved "
                 "commit; re-align and retry the append"
             )
-        res = self._resolve(head)
-        if res is None:  # legacy head: no manifest chain to rebase onto
-            raise OptimisticConcurrencyError(
-                f"table {self.name}: head v{head} predates manifests; "
-                "cannot rebase — retry the append"
-            )
-        if old_m is None:
-            # the staged claim dir vanished underneath us (an external
-            # vacuum_uncommitted run violating its no-active-writer
-            # contract, or manual cleanup) — the staged files are gone
-            # too; nothing to rebase
-            raise ConcurrentWriteError(
-                f"table {self.name}: staged claim v{claimed_v} vanished "
-                "mid-commit (external cleanup?) — retry"
-            )
+        head_names, head_stats = self._resolve(head)
         # the loser's removed files must still be head members (an
         # interleave touching them was caught above; this also guards
         # exotic cases like the same file removed twice)
-        head_members = set(res[0])
+        head_members = set(head_names)
         gone = read_set - head_members
         if gone:
             raise OptimisticConcurrencyError(
@@ -3347,7 +3042,7 @@ class ManagedTable:
         )
         manifest = self._build_child_manifest(
             head, new_names, list(old_m.get("removed", ())), new_stats,
-            base_names=res[0], base_stats=res[1],
+            base_names=head_names, base_stats=head_stats,
             dv_added=old_m.get("dv_added"),
         )
         manifest["partition_columns"] = old_m.get("partition_columns", [])
@@ -3370,7 +3065,7 @@ class ManagedTable:
 
     def _merge_candidate_files(
         self,
-        res: tuple[list[str], dict] | None,
+        res: tuple[list[str], dict],
         batch: DataFrame,
         keys: Sequence[str],
         key_bounds: Mapping[str, tuple] | None = None,
@@ -3381,8 +3076,8 @@ class ManagedTable:
         BATCH's key bounds on every key column — a file outside the
         bounds provably contains no batch key and need never be opened.
         Returns ``(candidates, bounds)``: candidates is None when
-        pruning has nothing to offer (legacy layout, no normalizable
-        bound on any key, or nothing pruned), in which case discovery
+        pruning has nothing to offer (no normalizable bound on any
+        key, or nothing pruned), in which case discovery
         scans the full snapshot as before; ``bounds`` is the batch's
         normalized key-range envelope ``{key: (lo, hi)}`` — the merge's
         READ-PREDICATE bounds, recorded in the staged manifest so a
@@ -3397,8 +3092,6 @@ class ManagedTable:
         exactly the layout the merge docstring prescribes at scale —
         and conservatively a superset otherwise (files lacking stats
         on a key column are always kept)."""
-        if res is None:
-            return None, {}
         if key_bounds is None:
             aggs = [
                 a
@@ -3468,16 +3161,16 @@ class ManagedTable:
 
         Returns the committed version, or None when nothing was
         committed (epoch already applied). The commit carries
-        ``expected_version`` = the version whose files were read/
-        hardlinked, so a merge racing past an interleaved commit fails
-        loudly (ConcurrentWriteError) instead of silently dropping that
+        ``expected_version`` = the version whose files were read, so a
+        merge racing past an interleaved commit rebases or fails loudly
+        (see ``_rebase_commit``) instead of silently dropping that
         commit's rows.
 
         ``merge_fn(current_subset, batch) -> merged`` must be key-local
         (the result for key k depends only on rows of key k — true for
         scd1_merge / scd2_apply). Only data files containing a batch key
-        are read back and rewritten; every untouched file is hardlinked
-        into the new snapshot byte-identical. Untouched keys co-located
+        are read back and rewritten; every untouched file carries into
+        the new snapshot by reference, byte-identical. Untouched keys co-located
         in touched files flow through ``merge_fn`` unchanged.
 
         Physical shape: discovery first PRUNES the candidate file set
@@ -3506,16 +3199,11 @@ class ManagedTable:
             return self.overwrite(merge_fn(empty, batch), epoch, epoch_key)
         v = self.current_version()
         res = self._resolve(v)
-        legacy_base = res is None
         bkeys = batch.select(*keys).distinct()
-        n_files = (
-            len(res[0]) if res is not None
-            else sum(1 for _ in self._version_dir(v).glob("*.parquet"))
-        )
         cap = max(
             1,
             min(
-                int(self.merge_full_rewrite_fraction * n_files),
+                int(self.merge_full_rewrite_fraction * len(res[0])),
                 self.merge_manifest_max_files,
             ),
         )
@@ -3534,24 +3222,14 @@ class ManagedTable:
                 # no discovery job at all
                 touched = []
             else:
-                # NOTE the full-snapshot frame (self.read()) is built
-                # only on the unpruned path: constructing it lists every
-                # member path into the driver's file index, an O(table)
-                # cost the pruned path must not pay just for an unused
-                # plan branch
-                if cand is None and legacy_base:  # legacy: scan it all
-                    discover = self.read().withColumn(
-                        "__file", F.input_file_name()
-                    )
-                else:
-                    # DV-folding tagged read (r12): a row a small delete
-                    # tombstoned must not re-touch its file — and must
-                    # never re-surface through the merge rewrite
-                    scan = sorted(cand) if cand is not None else res[0]
-                    discover = self._read_members(
-                        scan, self.table_schema(v), self._resolve_dv(v),
-                        keep_tag=True,
-                    ).withColumnRenamed(self.DV_COL, "__file")
+                # DV-folding tagged read (r12): a row a small delete
+                # tombstoned must not re-touch its file — and must never
+                # re-surface through the merge rewrite
+                scan = sorted(cand) if cand is not None else res[0]
+                discover = self._read_members(
+                    scan, self.table_schema(v), self._resolve_dv(v),
+                    keep_tag=True,
+                ).withColumnRenamed(self.DV_COL, "__file")
                 touched = (
                     discover
                     .join(F.broadcast(bkeys), list(keys), "left_semi")
@@ -3568,34 +3246,19 @@ class ManagedTable:
         # store names may be nested (hive partition dirs): map the
         # input_file_name basenames — globally unique — back to the
         # manifest's store-relative names
-        if res is not None:
-            by_base = {os.path.basename(n): n for n in res[0]}
-            touched_files = {by_base[b] for b in touched_base}
-        else:
-            touched_files = touched_base
+        by_base = {os.path.basename(n): n for n in res[0]}
+        touched_files = {by_base[b] for b in touched_base}
         new_v = self._claim_next_version()
         new_dir = self._version_dir(new_v)
-        src_dir = self.store if not legacy_base else self._version_dir(v)
         pcols = self.partition_columns()
         if full_rewrite:
             subset = self.read()
-        elif touched_files and not legacy_base:
+        else:
             # DV-folded subset (r12): rewriting a touched file from raw
-            # content would RESURRECT its tombstoned rows
+            # content would RESURRECT its tombstoned rows (no touched
+            # file: an empty frame of the committed schema)
             subset = self._read_members(
                 sorted(touched_files), self.table_schema(v), self._resolve_dv(v)
-            )
-        elif touched_files:
-            stored = self.table_schema(v)
-            reader = self.spark.read.schema(stored) if stored is not None else self.spark.read
-            subset = self._schema_order(
-                reader.parquet(*[str(src_dir / f) for f in sorted(touched_files)]),
-                stored,
-            )
-        else:
-            stored = self.table_schema(v)
-            subset = self.spark.createDataFrame(
-                [], stored if stored is not None else self.read().schema
             )
         # Schema is enforced on the merge OUTPUT (the batch legitimately
         # differs — e.g. CDC batches lack the SCD bookkeeping columns
@@ -3613,40 +3276,12 @@ class ManagedTable:
             stats = self._collect_stats_for(names, pcols, schema)
             self._attach_blooms(names, stats, schema)
             if full_rewrite:
-                prior_names = res[0] if res is not None else []
                 manifest = {
                     "base": v, "depth": 0, "added": names,
-                    # removed = the whole prior snapshot, so the change feed
-                    # can still diff a full-rewrite merge (legacy base: the
-                    # upgrade flag below forces the rebuild fallback instead)
-                    "removed": prior_names,
+                    # removed = the whole prior snapshot, so the change
+                    # feed can still diff a full-rewrite merge
+                    "removed": res[0],
                     "stats": stats, "files": names, "stats_full": stats,
-                }
-                if legacy_base:
-                    manifest["upgrade"] = True
-            elif legacy_base:
-                # one-time upgrade: link the UNTOUCHED legacy files into the
-                # store; the touched ones were rewritten above. Marked
-                # upgrade=True — removed refers to pre-store identities, so
-                # changes_since must rebuild across this commit.
-                base_names, base_stats, _ = self._snapshot_members(v)
-                legacy_order = [
-                    f.name for f in sorted(self._version_dir(v).glob("*.parquet"))
-                ]
-                kept = [
-                    n for n, lf in zip(base_names, legacy_order)
-                    if lf not in touched_files
-                ]
-                manifest = {
-                    "base": v, "depth": 0, "added": names,
-                    "removed": sorted(touched_files),
-                    "stats": stats,
-                    "files": kept + names,
-                    "stats_full": {
-                        **{n: base_stats[n] for n in kept if n in base_stats},
-                        **stats,
-                    },
-                    "upgrade": True,
                 }
             else:
                 manifest = self._build_child_manifest(
@@ -3662,7 +3297,7 @@ class ManagedTable:
                     manifest["read_bounds"] = {
                         c: list(b) for c, b in read_bounds.items()
                     }
-            if self.cdf_enabled() and not (legacy_base and not full_rewrite):
+            if self.cdf_enabled():
                 # Delta change data feed: materialize this commit's row-
                 # level changes into _change_data/ (referenced by cdc log
                 # actions). Old = the touched files' pre-merge rows, new =
@@ -3869,20 +3504,7 @@ class ManagedTable:
         cond_col = F.expr(condition) if isinstance(condition, str) else condition
         cond_true = F.coalesce(cond_col.cast("boolean"), F.lit(False))
         v = self.current_version()
-        res = self._resolve(v)
-        if res is None:
-            # legacy (pre-manifest) layout: one-time full-snapshot
-            # rewrite (which also upgrades the table into the store);
-            # change-feed derivability across it is forfeit, like any
-            # snapshot op. Op marker stays "snapshot" by design.
-            return self.overwrite(
-                rewrite_fn(self.read()), epoch, epoch_key,
-                expected_version=v,
-                # rewrite of existing rows: their identity/generated
-                # values carry through, policies must not re-fire
-                _apply_policies=False,
-            )
-        names, stats = res
+        names, stats = self._resolve(v)
         bounds = dict(self._dml_bounds(condition)) if isinstance(condition, str) else {}
         if prune:
             for c, (lo, hi) in prune.items():
@@ -3947,7 +3569,7 @@ class ManagedTable:
         # change in place — Delta's DV-update would tombstone + append,
         # a shape this engine routes through merge instead)
         dv_files: list[str] = []
-        if op == "delete" and not full_rewrite and stored is not None:
+        if op == "delete" and not full_rewrite:
             for n, cnt in match_counts.items():
                 rows = (stats.get(n) or {}).get("rows")
                 if rows and cnt <= min(
@@ -4189,12 +3811,7 @@ class ManagedTable:
         if self._epoch_already_applied(epoch, epoch_key):
             return None
         v = self.current_version()
-        res = self._resolve(v)
-        if res is None:
-            # legacy layout: no per-file reference-carry possible —
-            # full compact() is the upgrade path
-            return self.compact()
-        names, stats = res
+        names, stats = self._resolve(v)
         dv_map = self._resolve_dv(v)
         sizes = {n: (self.store / n).stat().st_size for n in names}
         small = sorted(n for n in names if sizes[n] < max_file_bytes)
@@ -4278,7 +3895,7 @@ class ManagedTable:
 
         ``cluster_by``: range-cluster the rewrite on these columns
         (``repartitionByRange`` + in-file sort) so per-file min/max
-        ranges become disjoint — this is what turns the ``_stats.json``
+        ranges become disjoint — this is what turns the per-file stats
         index into sharp data skipping (``read_pruned``) and keeps
         ``merge_keyed`` touching few files per incremental batch.
 
@@ -4455,15 +4072,12 @@ class ManagedTable:
         # GC'ing its staged store files, which only its presence
         # protects) would crash that writer mid-rebase. Dead-but-staged
         # orphans are vacuum_uncommitted's job, which requires the
-        # no-active-writer contract for exactly this reason. Legacy
-        # tables (no ledger) keep the old behavior.
-        committed_set = self._pointer_state().get("committed")
+        # no-active-writer contract for exactly this reason.
+        committed_set = set(self._pointer_state()["committed"])
         for d in sorted(self.dir.glob("v*")):
             v = int(d.name[1:])
             if v <= cur - keep and (
-                committed_set is None
-                or v in committed_set
-                or not any(d.iterdir())
+                v in committed_set or not any(d.iterdir())
             ):
                 shutil.rmtree(d, ignore_errors=True)
         self._gc_store(cur)
@@ -4471,24 +4085,12 @@ class ManagedTable:
         try:
             state = self._pointer_state()
             keep_from = cur - keep + 1
-            if state.get("committed") is None:
-                # Ledger-less table: seed NOW (from the surviving dirs) so
-                # the prune point is recorded. Deferring to the next
-                # _commit would seed a list starting above the vacuum
-                # horizon; _seed_ledger's min(seeded) floor covers that
-                # too, but recording keep_from here keeps the floor exact
-                # even if later commits tighten the heuristic.
-                self._seed_ledger(state)
-                state["committed_floor"] = max(
-                    state["committed_floor"], keep_from
-                )
-                self._write_pointer_locked(state)
             committed = state["committed"]
             dirty = False
             if any(x < keep_from for x in committed):
                 state["committed"] = [x for x in committed if x >= keep_from]
                 state["committed_floor"] = max(
-                    state.get("committed_floor", 0), keep_from
+                    state["committed_floor"], keep_from
                 )
                 dirty = True
             # bound namespaced per-event epoch keys: JSON object order is
@@ -4640,26 +4242,19 @@ class ManagedTable:
         check: the pointer's ``committed`` ledger (only ``_commit``
         appends to it, so losing-race or crashed writers never appear —
         even when their dir sits BELOW the pointer with complete data
-        and an ``_op`` marker). Legacy tables committed before the
-        ledger existed fall back to pointer-bound + ``_op``-marker
-        checks."""
+        and an ``_op`` marker)."""
         state = self._pointer_state()
-        committed = state.get("committed")
-        if committed is not None:
-            # entries below committed_floor were pruned by vacuum — for
-            # those (whose dirs vacuum also removed) fall through to the
-            # dir/marker checks instead of the membership test
-            if version >= state.get("committed_floor", 0) and version not in committed:
-                raise FileNotFoundError(
-                    f"table {self.name}: version {version} is not committed "
-                    "history (aborted/losing-writer dir, or never existed) — "
-                    "not a readable snapshot"
-                )
-        elif version > state["version"]:
+        # entries below committed_floor were pruned by vacuum — for
+        # those (whose dirs vacuum also removed) fall through to the
+        # dir/marker checks instead of the membership test
+        if (
+            version >= state["committed_floor"]
+            and version not in state["committed"]
+        ):
             raise FileNotFoundError(
                 f"table {self.name}: version {version} is not committed "
-                f"(pointer at v{state['version']}) — an orphan dir from "
-                "a crashed writer is not a readable snapshot"
+                "history (aborted/losing-writer dir, or never existed) — "
+                "not a readable snapshot"
             )
         vdir = self._version_dir(version)
         if not vdir.exists():
@@ -4678,8 +4273,7 @@ class ManagedTable:
         the schema as of that version, so post-evolution columns don't
         appear retroactively."""
         self._require_complete(version)
-        res = self._resolve(version)
-        return self._read_version(version, res[0] if res is not None else None)
+        return self._read_version(version, self._resolve(version)[0])
 
     def read_delta_version(self, dv: int) -> DataFrame:
         """Delta ``VERSION AS OF dv`` time travel: ``dv`` is a DELTA
@@ -4913,24 +4507,23 @@ class ManagedTable:
         return df.withColumn(target, guard)
 
     def _copy_schema(self, src_v: int, dst_dir: Path) -> None:
-        src = self._version_dir(src_v) / "_schema.json"
-        if src.exists():
-            shutil.copy2(src, dst_dir / "_schema.json")
+        shutil.copy2(
+            self._version_dir(src_v) / "_schema.json", dst_dir / "_schema.json"
+        )
 
     def restore(self, version: int) -> int:
         """Delta-RESTORE semantics: commit a NEW version whose content
         is snapshot ``version``. History only moves forward — the
         versions being rolled past stay readable for audit/time travel
         until vacuumed — and no data moves at all: the restore commit
-        is a full manifest referencing the old snapshot's store files
-        (a legacy source snapshot is linked into the store once).
+        is a full manifest referencing the old snapshot's store files.
 
         The restore commit is a snapshot barrier for ``appended_since``
         (op marker != append), so incremental consumers correctly fall
         back to a rebuild instead of silently missing the rollback."""
         self._require_complete(version)
-        names, stats, upgraded = self._snapshot_members(version)
-        src_m = self._manifest(version) or {}
+        names, stats = self._resolve(version)
+        src_m = self._committed_manifest(version)
         new_v = self._claim_next_version()
         manifest: dict = {
             "base": None, "depth": 0, "added": [], "removed": [],
@@ -4940,11 +4533,9 @@ class ManagedTable:
         # the target's deletion-vector state is part of its CONTENT —
         # restoring files without their tombstones would resurrect
         # small-deleted rows
-        dv = {} if upgraded else self._resolve_dv(version)
+        dv = self._resolve_dv(version)
         if dv:
             manifest["dv_full"] = dv
-        if upgraded:
-            manifest["upgrade"] = True
         self._write_manifest_file(new_v, manifest)
         self._copy_schema(version, self._version_dir(new_v))
         self._write_op_marker(new_v, "restore")
@@ -4987,7 +4578,7 @@ class ManagedTable:
         cur = state["version"]
         if cur < 0:
             raise FileNotFoundError(f"table {self.name} has no committed version")
-        names, stats, _ = self._snapshot_members(cur)
+        names, stats = self._resolve(cur)
         pcols = self.partition_columns()
         # Delta SHALLOW CLONE carries table properties: ALL committed
         # props copy over — partitioning and enable_cdf keep the
@@ -5546,9 +5137,7 @@ class Catalog:
             raise ValueError("MERGE needs at least one actionable clause")
         target_cols = None
         if table.exists():
-            stored = table.table_schema()
-            if stored is not None:
-                target_cols = [f.name for f in stored.fields]
+            target_cols = [f.name for f in table.table_schema().fields]
         # Delta raises only when multiple source rows match the same
         # TARGET row (DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET_ROW) —
         # duplicate source keys that match NO target row are legal in
@@ -6496,7 +6085,7 @@ class Catalog:
                     # the stored types (ANSI: an unsafe value fails the
                     # write loudly, like Spark's own INSERT)
                     stored = t.table_schema()
-                    if stored is not None and col_list is not None:
+                    if col_list is not None:
                         by_name = {f.name: f for f in stored.fields}
                         unknown = [c for c in col_list if c not in by_name]
                         if unknown:
@@ -6530,7 +6119,7 @@ class Catalog:
                                         .alias(f.name)
                                     )
                         rows = rows.select(*sel)
-                    elif stored is not None:
+                    else:
                         fields = list(stored.fields)
                         gen, ident = t.column_policies()
                         auto = {c for c in (*gen, *ident)}

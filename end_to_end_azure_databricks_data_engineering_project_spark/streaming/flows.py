@@ -437,7 +437,7 @@ def gold_flow(
                             n += _apply(gold, batch, True)
         if n is None:
             # No cursor yet, or a snapshot replacement (overwrite /
-            # restore / legacy upgrade) in range: full read. Replaying
+            # restore) in range: full read. Replaying
             # already-applied rows is a no-op under the SCD merges'
             # stale-drop + no-op suppression.
             n = _apply(gold, silver.read(), False)
@@ -1481,19 +1481,6 @@ def metric_stream(
         # delete-and-recreate at the SAME path (which restarts epoch
         # numbering invisibly to a path binding)
         sid = f"{ckpt}#{_checkpoint_generation(ckpt)}"
-        # One-time migration of the pre-generation binding (engine
-        # revisions before the '#<query id>' suffix bound str(ckpt)
-        # alone): a table built then holds a still-valid checkpoint —
-        # same path, same live metadata/query id — that the exact-match
-        # guard would refuse forever. Rebinding is safe precisely
-        # because the legacy id IS this id's path prefix: the epochs
-        # were numbered by this same (never recreated — its metadata
-        # survives) checkpoint. Runs under the commit lock inside
-        # migrate_prop; a third value still refuses loudly.
-        if catalog.table("auc_bins").table_prop("auc_stream_id") == str(ckpt):
-            catalog.table("auc_bins").migrate_prop(
-                "auc_stream_id", str(ckpt), sid
-            )
         run_auc_drain(
             catalog, batch_df, epoch=epoch_id,
             score_bin_col=score_bin_col, positive_col=positive_col,

@@ -64,15 +64,10 @@ def _batch(spark, n_rows: int, n_keys: int, seq_base: int, hot_key_rows: int = 0
 
 
 def _file_split(table: ManagedTable) -> tuple[int, int]:
-    # stable-file-store layout: the manifest records exactly what this
-    # commit wrote (added) vs carried by reference (members - added);
-    # legacy (pre-manifest) warehouses fall back to the prior_* naming
+    # the manifest records exactly what this commit wrote (added) vs
+    # carried by reference (members - added)
     v = table.current_version()
     m = table._manifest(v)
-    if m is None:
-        names = [f.name for f in table._version_dir(v).glob("*.parquet")]
-        carried = sum(1 for n in names if n.startswith("prior_"))
-        return len(names) - carried, carried
     total = len(table._resolve(v)[0])
     rewrote = len(m["added"])
     return rewrote, total - rewrote

@@ -248,59 +248,3 @@ def test_stream_attach_to_pre_binding_history_refused(spark, tmp_path, scored):
             stream_id="/ck/metrics",
         )
 
-
-def test_metric_stream_migrates_legacy_path_binding(spark, tmp_path):
-    """Engine revisions before the '#<query id>' generation suffix
-    bound str(ckpt) alone as auc_stream_id. A table built then holds a
-    still-valid checkpoint (same path, metadata intact) — the stream
-    must rebind it to the generation-qualified form (one-time, under
-    the commit lock) instead of refusing its own state forever."""
-    from pyspark.sql import types as T
-
-    from end_to_end_azure_databricks_data_engineering_project_spark.streaming.flows import metric_stream
-
-    schema = T.StructType(
-        [T.StructField("score", T.LongType()), T.StructField("positive", T.BooleanType())]
-    )
-    src = tmp_path / "preds"
-    cat = _cat(spark, tmp_path / "wh")
-    spark.createDataFrame([(10, True), (1, False)], schema).write.parquet(
-        str(src / "run=1")
-    )
-
-    def drain():
-        q = metric_stream(
-            spark, str(src), schema, cat, str(tmp_path / "ck"),
-            score_bin_col="score", positive_col="positive", binning="identity",
-        )
-        q.awaitTermination(120)
-
-    drain()
-    table = cat.table("auc_bins")
-    bound = table.table_prop("auc_stream_id")
-    legacy = str((tmp_path / "ck").resolve() / "auc_metric")
-    assert bound.startswith(legacy + "#")
-    # simulate the pre-generation binding the old revision left behind
-    assert table.migrate_prop("auc_stream_id", bound, legacy)
-    assert table.table_prop("auc_stream_id") == legacy
-    spark.createDataFrame([(5, True), (99, False)], schema).write.parquet(
-        str(src / "run=2")
-    )
-    drain()  # must migrate + drain, not refuse
-    assert table.table_prop("auc_stream_id") == bound
-    auc = auc_from_bins(table.read()).collect()[0]
-    assert (auc.n_pos, auc.n_neg) == (2, 2)
-
-
-def test_migrate_prop_refuses_foreign_identity(spark, tmp_path):
-    cat = _cat(spark, tmp_path / "wh")
-    t = cat.table("auc_bins")
-    t.overwrite(
-        spark.createDataFrame([(1,)], "x long"), set_props={"k": "other"}
-    )
-    from end_to_end_azure_databricks_data_engineering_project_spark.sources.tables import ConcurrentWriteError
-
-    with pytest.raises(ConcurrentWriteError, match="foreign identity"):
-        t.migrate_prop("k", "old", "new")
-    assert not t.migrate_prop("k", "other", "other")  # already-new no-op
-    assert not t.migrate_prop("absent", "a", "b")

@@ -1,9 +1,7 @@
-"""Committed-version ledger: pre-ledger seeding, orphan exclusion from
-incremental deltas, vacuum pruning."""
+"""Committed-version ledger: orphan exclusion from incremental deltas,
+vacuum pruning."""
 
 from __future__ import annotations
-
-import json
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,30 +15,6 @@ def _t(spark, tmp_path, name="t"):
 
 def _ids(spark, lo, hi):
     return spark.range(lo, hi).select(F.col("id").alias("k"))
-
-
-def _strip_ledger(t):
-    """Rewrite the pointer as a pre-ledger (legacy) state."""
-    p = t._pointer()
-    state = json.loads(p.read_text())
-    state.pop("committed", None)
-    state.pop("committed_floor", None)
-    p.write_text(json.dumps(state))
-
-
-def test_first_commit_on_legacy_table_seeds_history(spark, tmp_path):
-    t = _t(spark, tmp_path)
-    v0 = t.overwrite(_ids(spark, 0, 3))
-    v1 = t.append(_ids(spark, 3, 5))
-    _strip_ledger(t)  # simulate a table created before the ledger existed
-    v2 = t.append(_ids(spark, 5, 6))
-    # old committed snapshots must STILL be readable/restorable
-    assert t.read_at(v0).count() == 3
-    assert t.read_at(v1).count() == 5
-    t.restore(v0)
-    assert t.read().count() == 3
-    state = t._pointer_state()
-    assert set(state["committed"]) >= {v0, v1, v2}
 
 
 def test_appended_since_skips_losing_writer_orphan(spark, tmp_path):
@@ -92,78 +66,6 @@ def test_vacuum_prunes_ledger_and_delta_falls_back(spark, tmp_path):
     assert t.read().count() == 8
     with pytest.raises(FileNotFoundError):
         t.read_at(v0)  # vacuumed
-
-
-def test_vacuum_on_preledger_table_records_floor(spark, tmp_path):
-    """vacuum on a ledger-less table must seed the ledger and record the
-    prune point — otherwise the first post-upgrade commit would seed a
-    committed list starting above the vacuum horizon with floor 0, and
-    appended_since across the gap would silently DROP the vacuumed
-    versions' rows instead of forcing a rebuild."""
-    t = _t(spark, tmp_path)
-    v0 = t.overwrite(_ids(spark, 0, 2))
-    cursor = t.append(_ids(spark, 2, 3))  # v1 — consumer cursor
-    for lo in range(3, 7):
-        t.append(_ids(spark, lo, lo + 1))  # v2..v5
-    _strip_ledger(t)  # table predates the ledger
-    t.vacuum(keep=2)  # drops v0..v3
-    state = t._pointer_state()
-    assert state.get("committed") is not None
-    assert state["committed_floor"] >= t.current_version() - 1
-    t.append(_ids(spark, 7, 8))
-    # delta (cursor, current] crosses vacuumed territory: NOT derivable
-    assert t.appended_since(cursor) is None
-    assert t.changes_since(cursor) is None
-    # a range fully above the floor still folds incrementally
-    assert t.appended_since(t.current_version()) is not None
-    assert v0 == 0  # silence unused warning; v0 vacuumed by design
-
-
-def _legacy_commit(t, df, op):
-    """Fabricate a PRE-MANIFEST (legacy-layout) commit exactly as old
-    engine revisions wrote it: the full snapshot's parquet inside the
-    version dir, an _op marker, and a pointer bump with NO ledger and
-    NO manifest. Used to test compatibility paths — new code never
-    writes this layout."""
-    v = t._claim_next_version()
-    vdir = t._version_dir(v)
-    df.write.mode("overwrite").parquet(str(vdir))
-    (vdir / "_op").write_text(op)
-    p = t._pointer()
-    state = json.loads(p.read_text()) if p.exists() else {"version": -1, "epochs": {}}
-    state["version"] = v
-    state.pop("committed", None)
-    state.pop("committed_floor", None)
-    p.write_text(json.dumps(state))
-    return v
-
-
-def test_preledger_vacuumed_under_old_code_seeds_floor(spark, tmp_path):
-    """The advisor's exact reproduction: a pre-ledger LEGACY-layout
-    table vacuumed by OLD code (dirs gone, no floor recorded),
-    upgraded, then appended. Seeding must set committed_floor =
-    min(seeded) so the cursor range crossing the gap returns None
-    (rebuild) instead of delta rows that silently omit the vacuumed
-    commits."""
-    import shutil
-
-    t = _t(spark, tmp_path)
-    _legacy_commit(t, _ids(spark, 0, 2), "snapshot")  # v0
-    cursor = 1
-    for v in range(1, 7):  # v1..v6: legacy appends (full snapshots)
-        _legacy_commit(t, _ids(spark, 0, v + 2), "append")
-    # old-code vacuum(keep=2): remove dirs v<=4, record nothing
-    for v in range(0, 5):
-        shutil.rmtree(t._version_dir(v))
-    t.append(_ids(spark, 8, 9))  # v7 — seeds the ledger + upgrades layout
-    state = t._pointer_state()
-    assert state["committed_floor"] == 5  # min of surviving dirs v5,v6
-    assert t.appended_since(cursor) is None  # was [5,6,7] pre-fix: data loss
-    assert t.changes_since(cursor) is None
-    # above the floor, incremental folding still works
-    delta = t.appended_since(6)
-    assert delta is not None and sorted(r.k for r in delta.collect()) == [8]
-    assert t.read().count() == 9
 
 
 def test_commit_lock_survives_crashed_holder(spark, tmp_path):

@@ -3,7 +3,8 @@ a shared immutable store referenced by per-version manifests, so an
 append commit costs O(new files) in metadata AND in the Delta log —
 independent of table file count — with zero hardlink syscalls over the
 carried snapshot. Also covers manifest-chain rebasing, store GC under
-vacuum, metadata-only restore/clone, and the legacy-layout upgrade.
+vacuum, metadata-only restore/clone, and the manifest as the only
+on-disk format.
 """
 
 from __future__ import annotations
@@ -149,65 +150,20 @@ def test_restore_and_clone_are_metadata_only(spark, tmp_path):
     assert src.read().count() == 10 and dst.read().count() == 12
 
 
-def _legacy_commit(t, df, op):
-    """Fabricate a PRE-MANIFEST commit (old layout: data files inside
-    the version dir, no manifest, no ledger)."""
-    v = t._claim_next_version()
-    vdir = t._version_dir(v)
-    df.write.mode("overwrite").parquet(str(vdir))
-    (vdir / "_op").write_text(op)
-    p = t._pointer()
-    state = json.loads(p.read_text()) if p.exists() else {"version": -1, "epochs": {}}
-    state["version"] = v
-    state.pop("committed", None)
-    state.pop("committed_floor", None)
-    p.write_text(json.dumps(state))
-    return v
-
-
-def test_legacy_table_upgrades_on_first_write(spark, tmp_path):
-    """A table written by pre-manifest engine revisions keeps working:
-    reads stay legacy, the first new write links the snapshot into the
-    store ONCE, and everything after is O(changed files)."""
+def test_manifest_is_the_only_format(spark, tmp_path):
+    """Every committed version must carry its manifest: a missing one
+    is an error naming the version, never a silent read of the version
+    dir. A fresh table's first commit starts the ledger."""
     t = _t(spark, tmp_path)
-    _legacy_commit(t, _ids(spark, 0, 5), "snapshot")
-    _legacy_commit(t, _ids(spark, 0, 8), "append")  # legacy full snapshot
-    assert t.read().count() == 8  # legacy read path
-    assert t._manifest(t.current_version()) is None
-    v_appended = t.append(_ids(spark, 8, 10))  # upgrade commit
-    m = t._manifest(v_appended)
-    assert m is not None and "files" in m  # full manifest (rebased)
-    assert len(m["added"]) == 1  # only the new batch counts as added
-    assert sorted(r.k for r in t.read().collect()) == list(range(10))
-    # incremental consumers see only the new rows
-    delta = t.appended_since(v_appended - 1)
-    assert sorted(r.k for r in delta.collect()) == [8, 9]
-    # next commit is back to O(new files)
-    t.append(_ids(spark, 10, 11))
-    m2 = t._manifest(t.current_version())
-    assert "files" not in m2 and len(m2["added"]) == 1
-    assert t.read().count() == 11
-
-
-def test_legacy_merge_upgrade_preserves_pruning_and_blocks_feed(spark, tmp_path):
-    from end_to_end_azure_databricks_data_engineering_project_spark.operators.cdc import scd1_merge
-
-    t = _t(spark, tmp_path)
-    base = spark.range(100).select(
-        F.col("id").alias("k"), F.lit("old").alias("val"), F.lit(1).alias("seq")
-    )
-    _legacy_commit(t, base.repartition(4, "k"), "snapshot")
-    cursor = t.current_version()
-    batch = spark.createDataFrame([(7, "new", 2)], "k long, val string, seq int")
-    t.merge_keyed(batch, ["k"], lambda cur, b: scd1_merge(cur, b, ["k"], "seq"))
-    m = t._manifest(t.current_version())
-    assert m["upgrade"] is True
-    # pruning engaged: 3 of 4 legacy files carried (as upgraded links)
-    assert len(m["files"]) - len(m["added"]) == 3
-    got = {r.k: r.val for r in t.read().collect()}
-    assert got[7] == "new" and got[8] == "old" and len(got) == 100
-    # the change feed must NOT mis-derive across the upgrade commit
-    assert t.changes_since(cursor) is None
+    v0 = t.overwrite(_ids(spark, 0, 5))
+    state = json.loads(t._pointer().read_text())
+    assert state["committed"] == [v0]
+    assert state["committed_floor"] == 0
+    v1 = t.append(_ids(spark, 5, 8))
+    t._manifest_path(v1).unlink()
+    with pytest.raises(FileNotFoundError, match=f"version {v1}"):
+        t.read_at(v1)
+    assert t.read_at(v0).count() == 5
 
 
 def test_gc_spares_in_flight_writer_files(spark, tmp_path):
